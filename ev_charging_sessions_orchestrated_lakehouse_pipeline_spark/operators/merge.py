@@ -10,8 +10,9 @@ we implement them as DataFrame transforms that (a) run anywhere
 Parquet runs, and (b) compile to exactly the join plans a Delta MERGE
 executes underneath (anti-join + union ≙ the rewrite-matched-files
 path). The functions compose with ``writers.overwrite_partitions`` /
-``write_bucketed`` for persistence; when HAS_DELTA, callers can swap
-in native ``DeltaTable.merge`` without changing call sites.
+``write_bucketed`` for persistence; on the engine's own table format,
+the snapshot table, ``sources.snaptable.merge_into`` commits the same
+plan as one atomic snapshot.
 
 Scale notes:
 - ``merge_upsert`` is one shuffle on the merge keys for the anti join
@@ -698,7 +699,7 @@ def q_snapshot_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("o_totalprice", "<", 10000.0)],
         {"o_totalprice": "o_totalprice + 1.0"},
     )
-    after = set(st._read_manifest(table, st.current_version(table))["files"])
+    after = set(st._snapshot(table)[1]["files"])
     carried = len(before & after) > 0
     audit = (
         st.read_snapshot(spark, table)
@@ -1736,9 +1737,9 @@ def q_snapshot_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(table, ignore_errors=True)
     st.create_table(orders, table, [])
     st.optimize(spark, table, files_per_partition=8, cluster_by=["o_totalprice"])
-    v_before = st.current_version(table)
+    v_before, man_before = st._snapshot(table)
     band = [("o_totalprice", ">=", 100000.0), ("o_totalprice", "<", 200000.0)]
-    files_before = set(st._read_manifest(table, v_before)["files"])
+    files_before = set(man_before["files"])
 
     replacement = (
         orders.filter(
@@ -1837,10 +1838,7 @@ def q_snapshot_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_before = set(st._read_manifest(table, 1)["files"])
     st.widen_column(table, "user_id", "long")
     st.widen_column(table, "value", "double")
-    v_widen = st.current_version(table)
-    metadata_only = (
-        set(st._read_manifest(table, v_widen)["files"]) == files_before
-    )
+    metadata_only = set(st._snapshot(table)[1]["files"]) == files_before
     narrow_travel = dict(st.read_snapshot(spark, table, version=1).dtypes) == {
         "event_id": "int",
         "user_id": "int",
@@ -1936,7 +1934,7 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     st.rename_column(table, "o_orderpriority", "priority")
     st.widen_column(table, "o_custkey", "long")
     st.append(st.read_snapshot(spark, table).limit(0), table)  # plain commit
-    head = st._read_manifest(table, st.current_version(table))
+    _, head = st._snapshot(table)
     feats = set(head.get("reader_features") or [])
     features_exact = feats == {
         "deletion-vectors",
@@ -1959,12 +1957,12 @@ def q_snapshot_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     st.optimize(spark, table, files_per_partition=2)
     st.drop_feature(table, "deletion-vectors")
     st.drop_feature(table, "type-widening")
-    after_drop = st._read_manifest(table, st.current_version(table))
+    _, after_drop = st._snapshot(table)
     dropped_ok = set(after_drop.get("reader_features") or []) == {
         "column-mapping"
     }
     st.delete_where(spark, table, [("o_totalprice", "<", 5000.0)], use_dv=True)
-    rehead = st._read_manifest(table, st.current_version(table))
+    _, rehead = st._snapshot(table)
     drop_then_reaccrue_ok = bool(
         dropped_ok
         and set(rehead.get("reader_features") or [])
@@ -2524,12 +2522,12 @@ def q_snapshot_auto_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     plan = st.plan_compaction(table, max_files_per_partition=4)
     flagged_only_f = list(plan) == [(("o_orderstatus", "F"),)]
-    before = st._read_manifest(table, st.current_version(table))
+    _, before = st._snapshot(table)
     healthy_before = sorted(
         f for f in before["files"] if "o_orderstatus=F" not in f
     )
     st.auto_compact(spark, table, max_files_per_partition=4)
-    after = st._read_manifest(table, st.current_version(table))
+    _, after = st._snapshot(table)
     healthy_after = sorted(
         f for f in after["files"] if "o_orderstatus=F" not in f
     )
@@ -4151,14 +4149,14 @@ def q_snapshot_liquid_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             unknown_refused = True
         run("ALTER TABLE facts CLUSTER BY (cust_band)")
         declared = st.table_properties(t).get("clusterBy") == "cust_band"
-        before = st._read_manifest(t, st.current_version(t))
+        _, before = st._snapshot(t)
         pruned_before = len(
             st._prune_files(t, before, [("cust_band", "=", 7)])
         )
         # no cluster_by restated — optimize must pick up the declared
         # keys; 8 output files so range-split pruning is observable
         st.optimize(spark, t, files_per_partition=8)
-        after = st._read_manifest(t, st.current_version(t))
+        _, after = st._snapshot(t)
         pruned_after = len(st._prune_files(t, after, [("cust_band", "=", 7)]))
         files_pruned_lt_total = bool(
             pruned_before == len(before["files"])  # shuffled: no pruning
@@ -4345,7 +4343,7 @@ def q_snapshot_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         dry = run_maintenance(spark, wh, dry_run=True)
         head_after_dry = st.current_version(t)
         real = run_maintenance(spark, wh)
-        man = st._read_manifest(t, st.current_version(t))
+        _, man = st._snapshot(t)
         from collections import Counter
 
         per_part = Counter(f.split("/")[1] for f in man["files"])

@@ -14,9 +14,10 @@ jobs/ev_sessions_gold_etl.py:65-66) but scale-hardened:
   the default to ANSI, so we pin it off for parity.
 - Arrow enabled for the Pandas-UDF slow path.
 
-Delta Lake is wired up only if the ``delta`` package is importable
-(it is not in the v1 image); everything falls back to Parquet tables
-with Spark-native dynamic partition overwrite, which preserves the
+The session carries no table-format extension: the engine's table
+format is its own snapshot table (``sources/snaptable.py``), which
+needs only plain Parquet. Catalog-backed Parquet tables keep
+Spark-native dynamic partition overwrite, which preserves the
 reference's ``overwritePartitions()`` semantics
 (jobs/ev_sessions_gold_etl.py:156).
 """
@@ -26,15 +27,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-try:  # pragma: no cover - not present in the v1 image
-    from delta import configure_spark_with_delta_pip  # type: ignore
-
-    HAS_DELTA = True
-except Exception:  # pragma: no cover
-    configure_spark_with_delta_pip = None
-    HAS_DELTA = False
-
 
 DEFAULT_CONF: dict[str, str] = {
     # -- scale/perf ---------------------------------------------------
@@ -62,7 +54,6 @@ def get_spark(
     master: str | None = None,
     conf: dict[str, str] | None = None,
     driver_memory: str | None = None,
-    with_delta: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -83,17 +74,7 @@ def get_spark(
     if driver_memory:
         builder = builder.config("spark.driver.memory", driver_memory)
 
-    if with_delta and HAS_DELTA and configure_spark_with_delta_pip is not None:
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    else:
-        spark = builder.getOrCreate()
-
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

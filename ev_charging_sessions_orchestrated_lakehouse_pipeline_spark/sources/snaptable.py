@@ -2,8 +2,7 @@
 Parquet via atomic manifest commits — the in-engine equivalent of the
 reference's Iceberg v2 gold table (``jobs/ev_sessions_gold_etl.py:
 69-75,147-150``: snapshots, time travel, ``overwritePartitions``),
-built because neither Iceberg nor delta-spark is importable in this
-image (README "Delta Lake status").
+and the engine's own table format (README "Table format").
 
 Log-structured design (the same shape as the Delta/Iceberg logs):
 
@@ -275,91 +274,16 @@ def _load_dv_sidecar(path: str, size: int, mtime_ns: int) -> tuple[int, ...]:
     return tuple(json.loads(data))
 
 
-def _dv_sidecar_count(path: str) -> int:
-    """Position count of a ``.dvb`` sidecar from its header alone —
-    magic + one varint, no decode of the (possibly huge) body."""
-    with open(path, "rb") as fh:
-        head = fh.read(len(DV_BINARY_MAGIC) + 10)  # varint <= 10 bytes
-    if head[: len(DV_BINARY_MAGIC)] != DV_BINARY_MAGIC:
-        raise ValueError("not a DVB1 deletion-vector sidecar")
-    count, _pos = _get_varint(head, len(DV_BINARY_MAGIC))
-    return count
-
-
-#: A sidecar whose position count exceeds this stays a LAZY ref after
-#: manifest resolution: the read path (_apply_dvs) decodes it in
-#: EXECUTORS and anti-joins without a broadcast, so the driver never
-#: holds O(deleted rows) Python ints for tables whose DVs grew to
-#: scale (guide §5 — the driver should do almost no data work). Reads
-#: below the threshold keep the measured-fast LocalRelation broadcast
-#: path. Driver-side consumers that genuinely need the positions
-#: (commit carry-forward, CDF set diffs) decode lazily on first use —
-#: exactly what they paid before, via the same memoized loader.
-DV_DRIVER_DECODE_MAX = 1_000_000
-
-
-class _LazyDVPositions:
-    """Sequence view over a large ``.dvb`` sidecar that defers the
-    decode until positions are actually iterated/indexed. ``len()``
-    (and truthiness) come from the header count, so manifest-level
-    bookkeeping (``if ps``, ``len(ps)``) never triggers a decode."""
-
-    __slots__ = ("path", "size", "mtime_ns", "count")
-
-    def __init__(self, path: str, size: int, mtime_ns: int, count: int):
-        self.path = path
-        self.size = size
-        self.mtime_ns = mtime_ns
-        self.count = count
-
-    def _positions(self) -> tuple[int, ...]:
-        return _load_dv_sidecar(self.path, self.size, self.mtime_ns)
-
-    def __len__(self) -> int:
-        return self.count
-
-    def __iter__(self):
-        return iter(self._positions())
-
-    def __getitem__(self, i):
-        return self._positions()[i]
-
-    def __eq__(self, other):
-        if isinstance(other, _LazyDVPositions):
-            if (self.path, self.size, self.mtime_ns) == (
-                other.path,
-                other.size,
-                other.mtime_ns,
-            ):
-                return True
-            return self._positions() == other._positions()
-        if isinstance(other, (list, tuple)):
-            return list(self._positions()) == list(other)
-        return NotImplemented
-
-    def __repr__(self) -> str:
-        return f"_LazyDVPositions({self.path!r}, n={self.count})"
-
-
 def _resolve_dvs(table: str, dvs: dict) -> dict:
     """Materialize sidecar refs into position lists (reader form).
     Binary ``.dvb`` sidecars (current writer) and the JSON int-list
     form older commits wrote both resolve — tables never need a
-    rewrite to stay readable. Sidecars above DV_DRIVER_DECODE_MAX
-    positions resolve to a lazy ref (see :class:`_LazyDVPositions`)
-    instead of a driver-side list."""
+    rewrite to stay readable."""
     out = {}
     for f, val in dvs.items():
         if isinstance(val, dict):
             path = os.path.join(_snap_dir(table), val["$dv"])
             st = os.stat(path)
-            if path.endswith(".dvb"):
-                count = _dv_sidecar_count(path)
-                if count > DV_DRIVER_DECODE_MAX:
-                    out[f] = _LazyDVPositions(
-                        path, st.st_size, st.st_mtime_ns, count
-                    )
-                    continue
             out[f] = list(
                 _load_dv_sidecar(path, st.st_size, st.st_mtime_ns)
             )
@@ -727,11 +651,10 @@ def _try_rebase(
     policy = _REBASE_POLICY.get(operation)
     if policy is None:
         conflict("operation does not auto-rebase; re-read and retry")
-    head = current_version(table)
-    assert head is not None and head > parent
+    head, H = _snapshot(table)
+    assert head > parent
     if head - parent > 64:
         conflict("fell too far behind the head; re-read and retry")
-    H = _read_manifest(table, head)
     # idempotent-writer guard (Delta's txn appId/version check): if a
     # WINNER already carries this writer's app_id at an epoch >= ours,
     # the commit we're about to rebase is a replay that already landed
@@ -858,20 +781,11 @@ def _try_rebase(
     return head, new_files, new_stats, new_dv
 
 
-def _head_mapping(table: str) -> dict:
-    """The current head's column mapping {logical: physical} (empty
-    before the table exists or when no rename/drop ever happened)."""
-    head = current_version(table)
-    if head is None:
-        return {}
-    return _read_manifest(table, head).get("column_mapping") or {}
-
-
 def _write_data(
     df: DataFrame,
     table: str,
     partition_cols: list[str],
-    mapping: dict | None = None,
+    mapping: dict,
 ) -> list[str]:
     """Write a commit's data files into the shared data/ tree and
     return the relative paths of exactly the files this write
@@ -888,10 +802,9 @@ def _write_data(
     incoming frame is logical, so mapped columns rename before the
     write (the one write chokepoint every commit path goes through,
     so appends, rewrites, OPTIMIZE, and MERGE all stay consistent
-    with files written before a rename). ``mapping`` defaults to the
-    current head's; callers mid-evolution pass the updated one."""
-    if mapping is None:
-        mapping = _head_mapping(table)
+    with files written before a rename). ``mapping`` is the mapping
+    the commit publishes: the resolved parent's, ``{}`` on create, or
+    the updated one mid-evolution."""
     renames = {
         logical: phys
         for logical, phys in mapping.items()
@@ -1520,6 +1433,21 @@ def current_version(table: str) -> int | None:
     return versions[-1] if versions else None
 
 
+def _snapshot(table: str, version: int | None = None) -> tuple[int, dict]:
+    """Resolve one snapshot: ``(version, materialized manifest)`` for
+    ``version`` (the head when None). Lists ``_snapshots/`` once; a
+    missing table or an unknown/expired version raises ValueError."""
+    versions = _list_versions(table)
+    if not versions:
+        raise ValueError(f"{table} does not exist")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise ValueError(
+            f"version {v} of {table} does not exist (head={versions[-1]})"
+        )
+    return v, _read_manifest(table, v)
+
+
 def create_table(
     df: DataFrame,
     table: str,
@@ -1540,7 +1468,7 @@ def create_table(
     df = _apply_generated(df, generated or {})
     _validate_spec(partition_cols, set(df.columns))
     _validate_constraints(df, constraints or {})
-    files = _write_data(df, table, partition_cols)
+    files = _write_data(df, table, partition_cols, {})
     return _commit(
         table,
         "create",
@@ -1631,10 +1559,7 @@ def append(
     UPDATE_IN_DATABASE policy, infra/glue-crawlers.tf:47-50, and of
     Delta's mergeSchema): the manifest schema gains the new fields
     and earlier files read as null for them."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     _guard_identity(prev, df)
     df = _apply_generated(df, prev.get("generated") or {})
     schema_json = _evolve_schema(prev["schema"], df, merge_schema)
@@ -1660,7 +1585,7 @@ def append(
             if f.name not in old_names and f.name in used_physical:
                 mapping[f.name] = f"{f.name}__r{head + 1}"
     _validate_constraints(df, prev.get("constraints", {}))
-    new = _write_data(df, table, prev["partition_cols"], mapping=mapping)
+    new = _write_data(df, table, prev["partition_cols"], mapping)
     return _commit(
         table,
         _operation,
@@ -1686,10 +1611,7 @@ def truncate_table(table: str, txn: tuple[str, int] | None = None) -> int:
     version still reads every row, and VACUUM later reclaims the
     bytes once retention allows. Refused on appendOnly tables (it is
     the ultimate row-removing operation)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     return _commit(
         table,
         "truncate",
@@ -1726,15 +1648,14 @@ def replace_table(
     column absent from the new schema. Table properties carry over
     (Delta keeps them too), so an appendOnly declaration still
     refuses the replace."""
-    head = current_version(table)
-    if head is None:
+    if current_version(table) is None:
         return create_table(df, table, partition_cols, txn=txn)
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     pcols = (
         prev["partition_cols"] if partition_cols is None else partition_cols
     )
     _validate_spec(pcols, set(df.columns))
-    files = _write_data(df, table, pcols)
+    files = _write_data(df, table, pcols, {})
     return _commit(
         table,
         "replace",
@@ -1779,12 +1700,11 @@ def overwrite_table(
     computed against, so a commit landing inside the caller's
     compute window collides and revalidates instead of being
     silently built over."""
-    head = (
-        current_version(table) if parent_version is None else int(parent_version)
-    )
-    if head is None:
+    if parent_version is None and current_version(table) is None:
         return create_table(df, table)
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(
+        table, None if parent_version is None else int(parent_version)
+    )
     _guard_identity(prev, df)
     df = _apply_generated(df, prev.get("generated") or {})
     _validate_constraints(df, prev.get("constraints", {}))
@@ -1805,7 +1725,7 @@ def overwrite_table(
     for name in sorted(new_names - set(mapping)):
         if name in used_physical:
             mapping[name] = f"{name}__r{head + 1}"
-    new = _write_data(df, table, prev["partition_cols"], mapping=mapping)
+    new = _write_data(df, table, prev["partition_cols"], mapping)
     stats = _collect_stats(table, new)
     if materialized_row_ids:
         for e in stats.values():
@@ -1853,12 +1773,9 @@ def overwrite_partitions(
     between collide at publish and revalidate through
     :func:`_try_rebase`, instead of being silently built over (a
     lost update inside the rewritten partitions)."""
-    head = (
-        current_version(table) if parent_version is None else int(parent_version)
+    head, prev = _snapshot(
+        table, None if parent_version is None else int(parent_version)
     )
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
     pcols = prev["partition_cols"]
     if not pcols:
         raise ValueError(f"{table} is unpartitioned; use overwrite_table")
@@ -1880,7 +1797,7 @@ def overwrite_partitions(
     _guard_identity(prev, df)
     df = _apply_generated(df, prev.get("generated") or {})
     _validate_constraints(df, prev.get("constraints", {}))
-    new = _write_data(df, table, pcols)
+    new = _write_data(df, table, pcols, prev.get("column_mapping") or {})
     hive = _spec_names(pcols)
     touched = {tuple(sorted(_partition_values(f, hive).items())) for f in new}
     kept = [
@@ -1949,10 +1866,7 @@ def replace_where(
     clustered data a selective replace rewrites a handful of files
     out of thousands — the same economics as :func:`delete_where`.
     """
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist; use create_table")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     if not filters:
         raise ValueError(
             "refusing an unfiltered replace_where; use overwrite_table"
@@ -1967,6 +1881,7 @@ def replace_where(
         )
     _validate_constraints(df, prev.get("constraints", {}))
     pcols = prev["partition_cols"]
+    mapping = prev.get("column_mapping") or {}
     candidates = _prune_files(table, prev, filters)
     untouched = [f for f in prev["files"] if f not in set(candidates)]
     new: list[str] = []
@@ -1980,11 +1895,11 @@ def replace_where(
             candidates,
             schema,
             dvs=prev.get("deletion_vectors"),
-            mapping=prev.get("column_mapping"),
+            mapping=mapping,
         )
         survivors = cand_df.filter(~cond)
-        new += _write_data(survivors, table, pcols)
-    new += _write_data(df, table, pcols)
+        new += _write_data(survivors, table, pcols, mapping)
+    new += _write_data(df, table, pcols, mapping)
     return _commit(
         table,
         "replace_where",
@@ -2015,10 +1930,7 @@ def evolve_partitioning(table: str, new_cols: list[str]) -> int:
     :func:`optimize` migrates the old files (see the guard there);
     every other operation (scan, time travel, append, DML, CDF,
     vacuum) works across mixed layouts."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2093,10 +2005,8 @@ def _guard_column_ddl(prev: dict, col: str, verb: str) -> None:
 
 def table_properties(table: str) -> dict:
     """The head's table-property map (empty when none set)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    return dict(_read_manifest(table, head).get("properties") or {})
+    _, prev = _snapshot(table)
+    return dict(prev.get("properties") or {})
 
 
 def set_table_properties(table: str, props: dict) -> int:
@@ -2117,10 +2027,7 @@ def set_table_properties(table: str, props: dict) -> int:
       :func:`set_clustering`, Delta's liquid-clustering surface).
 
     Everything else is opaque user metadata carried verbatim."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     merged = dict(prev.get("properties") or {})
     merged.update({str(k): str(v) for k, v in props.items()})
     return _commit(
@@ -2142,10 +2049,7 @@ def unset_table_properties(
 ) -> int:
     """ALTER TABLE UNSET TBLPROPERTIES: remove ``keys`` metadata-only.
     Missing keys raise unless ``if_exists`` (the SQL default)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     props = dict(prev.get("properties") or {})
     missing = [k for k in keys if k not in props]
     if missing and not if_exists:
@@ -2252,10 +2156,7 @@ def drop_feature(table: str, feature: str) -> int:
         raise ValueError(
             f"unknown feature {feature!r}; this engine knows {sorted(known)}"
         )
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     present = set(prev.get("reader_features") or []) | set(
         prev.get("writer_features") or []
     )
@@ -2466,12 +2367,9 @@ def set_clustering(table: str, cols: list[str] | None) -> int:
     (unsets). Refused for partition columns (constant within a
     partition directory — clustering them is a no-op that would
     silently waste the sort) and unknown columns."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
+    head, prev = _snapshot(table)
     if not cols:
         return unset_table_properties(table, ["clusterBy"], if_exists=True)
-    prev = _read_manifest(table, head)
     schema = json.loads(prev["schema"])
     names = {f["name"] for f in schema["fields"]}
     unknown = [c for c in cols if c not in names]
@@ -2497,10 +2395,7 @@ def add_constraint(
     records the constraint in a metadata-only commit. Every future
     data-adding commit enforces it. Adding a name that already exists
     raises, like Delta."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     cons = dict(prev.get("constraints") or {})
     if name in cons:
         raise ValueError(
@@ -2526,10 +2421,7 @@ def drop_constraint(table: str, name: str, if_exists: bool = False) -> int:
     """ALTER TABLE DROP CONSTRAINT: metadata-only removal. A missing
     name raises unless ``if_exists`` (Delta's IF EXISTS), in which
     case the head is returned unchanged."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     cons = dict(prev.get("constraints") or {})
     if name not in cons:
         if if_exists:
@@ -2564,10 +2456,7 @@ def rename_column(table: str, old: str, new: str) -> int:
     Refused for partition columns and columns referenced by CHECK
     constraints (rename would silently break them — Delta refuses
     likewise)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2684,10 +2573,7 @@ def widen_column(table: str, col: str, new_type: str) -> int:
     so dropping is the always-safe direction); footer min/max stats
     stay, their JSON scalars compare unchanged under the wider type.
     """
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     from pyspark.sql.types import DecimalType, StructField, StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2751,10 +2637,7 @@ def drop_column(table: str, col: str) -> int:
     name gets a FRESH physical alias (see :func:`append`'s
     resurrection guard), so dropped data can never silently resurface
     under a new column."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(prev["schema"]))
@@ -2809,10 +2692,7 @@ def add_columns(
     alias in the column mapping — otherwise ``RENAME a->b`` followed
     by ``ADD COLUMNS (a int)`` would read b's old data back out under
     the new column."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     from pyspark.sql.types import StructField, StructType
 
     if isinstance(columns, str):
@@ -2945,17 +2825,11 @@ def read_snapshot(
     the materialized id column in files OPTIMIZE rewrote."""
     if sum(x is not None for x in (version, as_of, tag)) > 1:
         raise ValueError("pass at most one of version=, as_of=, tag=")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
     if tag is not None:
         version = read_tag(table, tag)
     if as_of is not None:
         version = version_as_of(table, as_of)
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    v, manifest = _snapshot(table, version)
     ident = manifest.get("identity")
     if with_row_ids or ident:
         if not manifest.get("row_tracking"):
@@ -3082,10 +2956,7 @@ def enable_row_tracking(table: str) -> int:
     — Delta's preserved-row-tracking writes). update_where's rewrite
     path assigns fresh ids to rewritten rows — the Delta default
     without preservation; its DV path preserves. Idempotent."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     if prev.get("row_tracking"):
         return head
     stats = {f: dict(e) for f, e in prev.get("file_stats", {}).items()}
@@ -3132,10 +3003,7 @@ def enable_identity(
     gated by the ``identity-columns`` feature. Enabling is one
     commit; idempotent for an identical spec, refused for a
     conflicting one (same stance as re-pointing a tag)."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     spec = {"col": col, "start": int(start), "step": int(step)}
     if prev.get("identity"):
         if prev["identity"] == spec:
@@ -3290,34 +3158,6 @@ def _java_uri_quote(path: str) -> str:
     return "".join(out)
 
 
-def _decode_dv_refs_arrow(batches):
-    """mapInArrow body for the executor-side DV decode: each input row
-    is (file uri, sidecar path); each output row is (file uri, deleted
-    position). Runs the same varint decode as the driver loader but
-    WITHOUT the lru_cache — a reused executor worker must not pin
-    O(positions) tuples across tasks — and yields bounded record
-    batches so one huge vector never materializes as a single Arrow
-    allocation."""
-    import pyarrow as pa
-
-    CHUNK = 1 << 18
-    for batch in batches:
-        uris = batch.column(0).to_pylist()
-        paths = batch.column(1).to_pylist()
-        for uri, path in zip(uris, paths):
-            with open(path, "rb") as fh:
-                ps = _decode_dv_binary(fh.read())
-            for i in range(0, len(ps), CHUNK):
-                part = ps[i : i + CHUNK]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([uri] * len(part), type=pa.string()),
-                        pa.array(part, type=pa.int64()),
-                    ],
-                    names=["___dvf", "___dvp"],
-                )
-
-
 def _apply_dvs(spark, df, table: str, dvs: dict):
     """Merge-on-read: anti-join the per-file deleted row positions
     (deletion vectors) out of a position-keyed frame (must carry the
@@ -3327,13 +3167,7 @@ def _apply_dvs(spark, df, table: str, dvs: dict):
     take the rewrite path. ``_metadata.row_index`` is the row's
     position within the FILE — verified across many-row-group files
     (tests/test_snaptable.py), since a row-group-scoped index would
-    silently corrupt every multi-row-group DV at scale.
-
-    Vectors that resolved lazily (> DV_DRIVER_DECODE_MAX positions)
-    never touch the driver at all: their sidecars decode in EXECUTORS
-    (one file per task via mapInArrow over the ref list) and
-    anti-join WITHOUT a broadcast — at that cardinality the planner's
-    shuffled join is the memory-safe shape (guide §5)."""
+    silently corrupt every multi-row-group DV at scale."""
     from pyspark.sql import functions as F
 
     # _abs_uri (Java-rule URI quoting, pure Python) is per-FILE work:
@@ -3341,34 +3175,12 @@ def _apply_dvs(spark, df, table: str, dvs: dict):
     # where a 60k-position DV set paid 60k quote calls (~5 s profiled)
     # instead of one per file
     uris = {f: _abs_uri(table, f) for f in dvs}
-    lazy = {
-        f: ps for f, ps in dvs.items() if isinstance(ps, _LazyDVPositions)
-    }
-    rows = [
-        (uris[f], int(p))
-        for f, ps in dvs.items()
-        if f not in lazy
-        for p in ps
-    ]
+    rows = [(uris[f], int(p)) for f, ps in dvs.items() for p in ps]
     if rows:
         dv_df = local_df(spark, rows, "___dvf string, ___dvp long")
         df = df.join(
             F.broadcast(dv_df),
             (df["___f"] == dv_df["___dvf"]) & (df["___ri"] == dv_df["___dvp"]),
-            "left_anti",
-        )
-    if lazy:
-        refs = local_df(
-            spark,
-            [(uris[f], ps.path) for f, ps in sorted(lazy.items())],
-            "___dvf string, ___dvpath string",
-        ).repartition(len(lazy))  # one sidecar decode per task
-        big = refs.mapInArrow(
-            _decode_dv_refs_arrow, "___dvf string, ___dvp long"
-        )
-        df = df.join(
-            big,
-            (df["___f"] == big["___dvf"]) & (df["___ri"] == big["___dvp"]),
             "left_anti",
         )
     return df
@@ -3607,13 +3419,7 @@ def metadata_count(
     file may still hold non-matching rows, so a stats-only count
     would be an upper bound, not a count — use :func:`scan` +
     ``count()`` for those."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _snapshot(table, version)
     hive = _spec_names(manifest["partition_cols"])
     for col, op, _val in filters or []:
         if op not in ("=", "==") or col not in hive:
@@ -3659,13 +3465,7 @@ def scan(
     into a handful of files without any partition-layout help.
     ``filters``: [(col, op, literal)] with op in <,<=,>,>=,=,==,
     combined conjunctively."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _snapshot(table, version)
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(json.loads(manifest["schema"]))
@@ -3678,24 +3478,7 @@ def scan(
         dvs=manifest.get("deletion_vectors"),
         mapping=manifest.get("column_mapping"),
     )
-    from pyspark.sql import functions as F
-
-    for col, op, val in filters or []:
-        c = F.col(col)
-        if op == "isnull":
-            df = df.filter(c.isNull())
-            continue
-        if op == "notnull":
-            df = df.filter(c.isNotNull())
-            continue
-        if op == "in":
-            df = df.filter(c.isin(list(val)))
-            continue
-        df = df.filter(
-            {"=": c == val, "==": c == val, ">": c > val, ">=": c >= val,
-             "<": c < val, "<=": c <= val, "!=": c != val}[op]
-        )
-    return df
+    return df.filter(_filters_to_column(filters)) if filters else df
 
 
 def table_layout(table: str, version: int | None = None) -> list[dict]:
@@ -3706,13 +3489,7 @@ def table_layout(table: str, version: int | None = None) -> list[dict]:
     table size). A partition with many small files is a compaction
     target; one huge file wants a split. Sorted by file count
     descending so the worst offender leads."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _snapshot(table, version)
     stats = manifest.get("file_stats", {})
     hive = _spec_names(manifest["partition_cols"])
     groups: dict[tuple, list[int]] = {}
@@ -3759,13 +3536,7 @@ def scan_any(
 
     if not branches or any(not b for b in branches):
         raise ValueError("scan_any needs >=1 branch, each a non-empty conjunct list")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _snapshot(table, version)
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     keep = _prune_files_any(table, manifest, branches)
     df = _read_union(
@@ -3796,17 +3567,6 @@ def commit_with_retry(fn, retries: int = 5):
         except ConcurrentCommit as exc:
             last = exc
     raise last  # type: ignore[misc]
-
-
-def register_snapshot(
-    spark: SparkSession, table: str, view_name: str, version: int | None = None
-) -> None:
-    """SQL-on-snapshot: expose a (possibly time-traveled) snapshot as
-    a temp view for ``spark.sql`` — the engine's Athena-equivalent
-    query surface (reference S11/S12) over versioned tables. The view
-    pins the manifest's file list at registration time, so later
-    commits don't shift results under a running query session."""
-    read_snapshot(spark, table, version).createOrReplaceTempView(view_name)
 
 
 def _as_branches(filters: list) -> list[list[tuple]]:
@@ -3882,10 +3642,7 @@ def _rewrite_matching_files(
     carries over by reference — the Delta DELETE/UPDATE file-rewrite
     model. With clustered data (see :func:`optimize`) a selective
     predicate rewrites a handful of files out of thousands."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     pcols = prev["partition_cols"]
     branches = _as_branches(filters)
     if not branches:
@@ -3905,9 +3662,11 @@ def _rewrite_matching_files(
         dvs=prev.get("deletion_vectors"),
         mapping=prev.get("column_mapping"),
     )
-    rewritten, operation = transform(cand_df)
+    rewritten, operation = transform(cand_df, prev)
     _validate_constraints(rewritten, prev.get("constraints", {}))
-    new = _write_data(rewritten, table, pcols)
+    new = _write_data(
+        rewritten, table, pcols, prev.get("column_mapping") or {}
+    )
     return _commit(
         table,
         operation,
@@ -3952,15 +3711,12 @@ def delete_where(
     cond = _filters_to_column(filters)
     if not use_dv:
         return _rewrite_matching_files(
-            spark, table, filters, lambda df: (df.filter(~cond), "delete")
+            spark, table, filters, lambda df, _prev: (df.filter(~cond), "delete")
         )
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     branches = _as_branches(filters)
     if not branches:
         raise ValueError("refusing an unfiltered delete; pass filters")
@@ -4029,10 +3785,7 @@ def update_where(
     if use_dv:
         from pyspark.sql.types import StructType
 
-        head = current_version(table)
-        if head is None:
-            raise ValueError(f"{table} does not exist")
-        prev = _read_manifest(table, head)
+        head, prev = _snapshot(table)
         branches = _as_branches(filters)
         if not branches:
             raise ValueError("refusing an unfiltered update; pass filters")
@@ -4108,7 +3861,12 @@ def update_where(
         ).collect()  # bounded: one row per UPDATED row (selective path)
         if not hits:
             return head
-        new = _write_data(updated, table, prev["partition_cols"])
+        new = _write_data(
+            updated,
+            table,
+            prev["partition_cols"],
+            prev.get("column_mapping") or {},
+        )
         abs_to_entry = {_abs_uri(table, f): f for f in prev["files"]}
         dvs = {
             f: set(ps) for f, ps in prev.get("deletion_vectors", {}).items()
@@ -4131,7 +3889,7 @@ def update_where(
             deletion_vectors={f: sorted(ps) for f, ps in dvs.items()},
         )
 
-    def transform(df: DataFrame):
+    def transform(df: DataFrame, prev: dict):
         # one select so every SET expression sees the OLD row (SQL
         # UPDATE semantics), not earlier assignments
         names = list(df.columns)
@@ -4145,10 +3903,7 @@ def update_where(
             for c in names
         ]
         out = df.select(*cols)
-        head = current_version(table)
-        gen = (
-            (_read_manifest(table, head).get("generated") or {}) if head else {}
-        )
+        gen = prev.get("generated") or {}
         # recompute generated columns over the rewritten frame: rows
         # the predicate matched may have changed the sources, and
         # untouched rows recompute to their existing values
@@ -4180,10 +3935,7 @@ def analyze_table(
     from pyspark.sql import functions as F
     from pyspark.sql.types import AtomicType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
+    head, prev = _snapshot(table)
     df = read_snapshot(spark, table)
     if columns is None:
         pnames = set(_spec_names(prev["partition_cols"]))
@@ -4236,11 +3988,8 @@ def analyzed_stats(table: str, version: int | None = None) -> dict | None:
     :func:`table_stats`, which folds exact COUNT/MIN/MAX from the
     per-file footer index without any scan; NDV and null counts need
     the one-pass scan ANALYZE runs."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    return _read_manifest(table, v).get("table_stats")
+    _, manifest = _snapshot(table, version)
+    return manifest.get("table_stats")
 
 
 def history(table: str) -> list[dict]:
@@ -4553,13 +4302,7 @@ def table_stats(table: str, version: int | None = None) -> dict:
     the result rather than answered stale."""
     from pyspark.sql.types import StructType
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
-    manifest = _read_manifest(table, v)
+    _, manifest = _snapshot(table, version)
     fs = manifest.get("file_stats", {})
     files = manifest["files"]
     missing = [f for f in files if f not in fs]
@@ -4662,10 +4405,7 @@ def add_bloom_index(
 
     from ..functions.hashing import hash60
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    manifest = _read_manifest(table, head)
+    head, manifest = _snapshot(table)
     files = manifest["files"]
     stats = {f: dict(s) for f, s in manifest.get("file_stats", {}).items()}
     cmap = manifest.get("column_mapping") or {}
@@ -5366,9 +5106,7 @@ def rollback(table: str, version: int) -> int:
     the bad head stays in history (auditable) and time travel to it
     still works until vacuumed."""
     head = current_version(table)
-    if head is None or version not in _list_versions(table):
-        raise ValueError(f"version {version} of {table} does not exist")
-    target = _read_manifest(table, version)
+    _, target = _snapshot(table, version)
     return _commit(
         table,
         f"rollback_to_v{version}",
@@ -5500,15 +5238,12 @@ def optimize(
     one) — Delta's liquid-clustering surface: the layout policy lives
     on the TABLE, and every maintenance pass re-applies it without the
     caller re-stating keys."""
-    head = current_version(table)
-    if cluster_by is None and head is not None:
-        declared = (table_properties(table) or {}).get("clusterBy")
+    head, prev = _snapshot(table)
+    if cluster_by is None:
+        declared = (prev.get("properties") or {}).get("clusterBy")
         if declared:
             cluster_by = [c for c in declared.split(",") if c]
             zorder = len(cluster_by) > 1
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    prev = _read_manifest(table, head)
     pcols = prev["partition_cols"]
     if target_file_bytes is not None and target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
@@ -5579,7 +5314,7 @@ def optimize(
         ).sortWithinPartitions(*cluster_by)
     else:
         out = df.coalesce(files_per_partition)
-    new = _write_data(out, table, pcols)
+    new = _write_data(out, table, pcols, prev.get("column_mapping") or {})
     new_paths = [os.path.join(table, f) for f in new]
     n_after = (
         spark.read.option("basePath", _data_dir(table)).parquet(*new_paths).count()
@@ -5677,7 +5412,7 @@ def _optimize_partitions(
     out = laid.repartition(files_per_partition, *hive_names)
     if cluster_by:
         out = out.sortWithinPartitions(*cluster_by)
-    new = _write_data(out, table, pcols)
+    new = _write_data(out, table, pcols, prev.get("column_mapping") or {})
     new_paths = [os.path.join(table, f) for f in new]
     n_after = (
         spark.read.option("basePath", _data_dir(table)).parquet(*new_paths).count()
@@ -5759,10 +5494,7 @@ def merge_into(
     is inherently a whole-table statement."""
     from ..operators.merge import merge_upsert
 
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    man = _read_manifest(table, head)
+    head, man = _snapshot(table)
     pcols = man["partition_cols"]
     track = bool(man.get("row_tracking"))
     if track:
@@ -5973,12 +5705,9 @@ def clone_table(src_table: str, dst_table: str) -> int:
     references expired source files, exactly Delta's documented
     shallow-clone hazard). Readers handle the mixed ownership via
     per-group basePath resolution (:func:`_data_root_of`)."""
-    head = current_version(src_table)
-    if head is None:
-        raise ValueError(f"{src_table} does not exist")
+    _, prev = _snapshot(src_table)
     if current_version(dst_table) is not None:
         raise ValueError(f"{dst_table} already exists")
-    prev = _read_manifest(src_table, head)
     abs_files = [
         f if os.path.isabs(f) else os.path.normpath(os.path.join(src_table, f))
         for f in prev["files"]
@@ -6121,17 +5850,21 @@ def vacuum(
     expiry — their manifests and the files those reference survive
     any ``retain_last``, the Iceberg ref-retention rule; drop the tag
     to let the version age out."""
+    versions = _list_versions(table)
+    if not versions:
+        return {
+            "expired_versions": 0,
+            "deleted_files": 0,
+            "reclaimed_bytes": 0,
+            "deleted_dv_sidecars": 0,
+            "skipped_young_files": 0,
+        }
     if grace_seconds is None:
         # per-table default (SET TBLPROPERTIES vacuum.graceSeconds),
         # falling back to the engine-wide constant
-        head_v = current_version(table)
         prop = (
-            (_read_manifest(table, head_v).get("properties") or {}).get(
-                "vacuum.graceSeconds"
-            )
-            if head_v is not None
-            else None
-        )
+            _read_manifest(table, versions[-1]).get("properties") or {}
+        ).get("vacuum.graceSeconds")
         grace = VACUUM_GRACE_SECONDS if prop is None else float(prop)
     else:
         grace = float(grace_seconds)
@@ -6143,15 +5876,6 @@ def vacuum(
         except FileNotFoundError:
             return False
 
-    versions = _list_versions(table)
-    if not versions:
-        return {
-            "expired_versions": 0,
-            "deleted_files": 0,
-            "reclaimed_bytes": 0,
-            "deleted_dv_sidecars": 0,
-            "skipped_young_files": 0,
-        }
     tagged = set(_tagged_versions(table).values())
     expired = 0
     expirable: list[int] = []
@@ -6326,12 +6050,7 @@ def create_tag(table: str, name: str, version: int | None = None) -> int:
     name fails — drop it first (matching Iceberg's refusal to
     silently repoint a tag)."""
     _check_ref_name(name)
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
+    v, _ = _snapshot(table, version)
     final = _tag_path(table, name)
     os.makedirs(os.path.dirname(final), exist_ok=True)
     tmp = final + f".{uuid.uuid4().hex}.tmp"
@@ -6385,16 +6104,10 @@ def create_branch(table: str, name: str, version: int | None = None) -> str:
     Writes to the branch land in the branch's OWN data tree; the
     parent never sees them until :func:`fast_forward`."""
     _check_ref_name(name)
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    v = head if version is None else version
-    if v not in _list_versions(table):
-        raise ValueError(f"version {v} of {table} does not exist (head={head})")
+    v, prev = _snapshot(table, version)
     bp = branch_path(table, name)
     if current_version(bp) is not None:
         raise ValueError(f"branch {name!r} already exists on {table}")
-    prev = _read_manifest(table, v)
     abs_files = [
         f if os.path.isabs(f) else os.path.normpath(os.path.join(table, f))
         for f in prev["files"]
@@ -6486,10 +6199,9 @@ def fast_forward(table: str, name: str) -> int:
     consumed (dropped) — its lineage referenced the now-moved files.
     """
     bp = branch_path(table, name)
-    bhead = current_version(bp)
-    if bhead is None:
+    if current_version(bp) is None:
         raise ValueError(f"branch {name!r} does not exist on {table}")
-    bman = _read_manifest(bp, bhead)
+    bhead, bman = _snapshot(bp)
     fork = _read_manifest(bp, 1).get("branch_of", {}).get("fork_version")
     head = current_version(table)
     if head != fork:
@@ -6590,10 +6302,7 @@ def plan_compaction(
     arithmetic, no data read. The policy half of auto OPTIMIZE: at
     100 TB you compact the partitions streaming ingest fragmented,
     never the whole table."""
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    m = _read_manifest(table, head)
+    _, m = _snapshot(table)
     hive = _spec_names(m["partition_cols"])
     counts: dict[tuple, int] = {}
     for f in m["files"]:
@@ -6619,10 +6328,7 @@ def plan_compaction_bytes(
 
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    head = current_version(table)
-    if head is None:
-        raise ValueError(f"{table} does not exist")
-    m = _read_manifest(table, head)
+    _, m = _snapshot(table)
     hive = _spec_names(m["partition_cols"])
     groups: dict[tuple, list[str]] = {}
     for f in m["files"]:
@@ -6674,7 +6380,7 @@ def auto_compact(
             # rewrite (per-partition scoping can't address dir-less
             # files).
             if target_file_bytes:
-                m = _read_manifest(table, current_version(table))
+                _, m = _snapshot(table)
                 n = max(
                     1,
                     math.ceil(

@@ -385,12 +385,9 @@ def cdc_merge_stream(
             # merge
             import json as _json
 
-            head = snaptable.current_version(table)
+            _, man = snaptable._snapshot(table)
             target_cols = {
-                f["name"]
-                for f in _json.loads(
-                    snaptable._read_manifest(table, head)["schema"]
-                )["fields"]
+                f["name"] for f in _json.loads(man["schema"])["fields"]
             }
             extra = [
                 c

@@ -463,6 +463,20 @@ def test_overwrite_drops_mapping_of_departed_columns(spark, orders, tmp_path):
     assert snap.count() == orders.count()
 
 
+def test_replace_after_rename_writes_logical_names(spark, tmp_path):
+    """REPLACE resets the column mapping, so its files must carry the
+    new schema's names as-is: writing them under the replaced table's
+    physical aliases would read every renamed column back as null."""
+    t = _tbl(tmp_path)
+    st.create_table(spark.createDataFrame([(1, 1.0)], "id int, a double"), t, [])
+    st.rename_column(t, "a", "b")
+    v = st.replace_table(
+        spark.createDataFrame([(2, 2.0)], "id int, b double"), t
+    )
+    assert not st._read_manifest(t, v).get("column_mapping")
+    assert [tuple(r) for r in st.read_snapshot(spark, t).collect()] == [(2, 2.0)]
+
+
 def test_ddl_guard_ignores_string_literals(spark, orders, tmp_path):
     """ADVICE r7 (low): a CHECK constraint whose TEXT mentions a
     column name only inside a string literal must not block DDL on

@@ -89,7 +89,7 @@ def test_crashed_write_is_invisible_and_vacuumable(spark, orders, tmp_path):
     st.create_table(orders, t, ["o_orderstatus"])
     n = st.read_snapshot(spark, t).count()
     # simulate the crash: data lands, no manifest follows
-    st._write_data(orders.limit(50), t, ["o_orderstatus"])
+    st._write_data(orders.limit(50), t, ["o_orderstatus"], {})
     assert st.read_snapshot(spark, t).count() == n  # readers unaffected
     report = st.vacuum(t, grace_seconds=0)
     assert report["deleted_files"] > 0 and report["expired_versions"] == 0
@@ -109,6 +109,40 @@ def test_vacuum_retention_expires_time_travel(spark, orders, tmp_path):
     assert st.read_snapshot(spark, t).count() == 20
     with pytest.raises(ValueError, match="does not exist"):
         st.read_snapshot(spark, t, version=1)
+
+
+_VERSION_READERS = {
+    "read_snapshot": lambda spark, t, v: st.read_snapshot(spark, t, version=v),
+    "scan": lambda spark, t, v: st.scan(spark, t, [("id", ">", 0)], version=v),
+    "scan_any": lambda spark, t, v: st.scan_any(
+        spark, t, [[("id", ">", 0)]], version=v
+    ),
+    "metadata_count": lambda spark, t, v: st.metadata_count(t, version=v),
+    "table_layout": lambda spark, t, v: st.table_layout(t, version=v),
+    "table_stats": lambda spark, t, v: st.table_stats(t, version=v),
+    "analyzed_stats": lambda spark, t, v: st.analyzed_stats(t, version=v),
+    "create_tag": lambda spark, t, v: st.create_tag(t, "pinned", version=v),
+    "create_branch": lambda spark, t, v: st.create_branch(t, "dev", version=v),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(_VERSION_READERS))
+def test_version_readers_reject_missing_table_and_expired_version(
+    spark, tmp_path, reader
+):
+    """Every version-taking reader resolves its snapshot the same way:
+    a missing table and a version vacuum expired both raise
+    ValueError naming what does not exist."""
+    call = _VERSION_READERS[reader]
+    with pytest.raises(ValueError, match="does not exist"):
+        call(spark, str(tmp_path / "absent"), None)
+    t = _tbl(tmp_path)
+    st.create_table(spark.createDataFrame([(1,), (2,)], "id int"), t, [])
+    st.append(spark.createDataFrame([(3,)], "id int"), t)
+    st.vacuum(t, retain_last=1, grace_seconds=0)
+    with pytest.raises(ValueError, match="does not exist"):
+        call(spark, t, 1)
+    call(spark, t, 2)  # the retained head still resolves
 
 
 def test_concurrent_commit_collision_raises(spark, orders, tmp_path):
@@ -640,7 +674,7 @@ def test_two_independent_writers_exactly_one_wins_then_v3(spark, orders, tmp_pat
             head = st.current_version(t)
             prev = st._read_manifest(t, head)
             assert st.append(batch_a, t) == 2  # writer A commits v2
-            new = st._write_data(batch_b, t, prev["partition_cols"])
+            new = st._write_data(batch_b, t, prev["partition_cols"], {})
             return st._commit(
                 t, "append", sorted(prev["files"] + new),
                 prev["partition_cols"], prev["schema"], head,
@@ -665,8 +699,8 @@ def test_register_snapshot_sql_surface(spark, orders, tmp_path):
     t = _tbl(tmp_path)
     st.create_table(orders, t, ["o_orderstatus"])
     st.overwrite_table(orders.limit(7), t)
-    st.register_snapshot(spark, t, "snap_now")
-    st.register_snapshot(spark, t, "snap_v1", version=1)
+    st.register_snapshot_view(spark, t, "snap_now")
+    st.register_snapshot_view(spark, t, "snap_v1", version=1)
     assert spark.sql("SELECT COUNT(*) AS n FROM snap_now").collect()[0].n == 7
     assert (
         spark.sql("SELECT COUNT(*) AS n FROM snap_v1").collect()[0].n
@@ -1554,15 +1588,10 @@ def test_full_lifecycle_composition(spark, orders, tmp_path):
         st.read_snapshot(spark, clone).count()
 
 
-def test_deletion_vector_executor_decode_above_threshold(
-    spark, orders, tmp_path, monkeypatch
-):
-    """Inflated-DV regime (r15, VERDICT r14 item 6): a sidecar whose
-    position count exceeds DV_DRIVER_DECODE_MAX must resolve to a
-    LAZY ref, decode in EXECUTORS (mapInArrow over the ref list,
-    no broadcast), and produce exactly the same snapshot as the
-    driver-side LocalRelation path. The threshold is monkeypatched
-    low so the fixture-scale delete exercises the scale path."""
+def test_deletion_vector_sidecar_read_stats_and_cdf(spark, orders, tmp_path):
+    """A deletion vector too large to inline lands in a ``.dvb``
+    sidecar; the snapshot read, the metadata row count and the CDF
+    delete feed all see exactly the deleted rows through it."""
     t = _tbl(tmp_path)
     st.create_table(orders, t, [])
     n0 = orders.count()
@@ -1570,39 +1599,21 @@ def test_deletion_vector_executor_decode_above_threshold(
     n_del = orders.filter(F.col("o_totalprice") > med).count()
     assert n_del > st.DV_INLINE_MAX  # must land in a .dvb sidecar
 
-    st.delete_where(spark, t, [("o_totalprice", ">", float(med))], use_dv=True)
+    v = st.delete_where(spark, t, [("o_totalprice", ">", float(med))], use_dv=True)
+    raw = st._raw_manifest(t, v)["deletion_vectors"]
+    assert any(isinstance(ref, dict) for ref in raw.values())
     expect = {
         r.o_orderkey
         for r in orders.filter(F.col("o_totalprice") <= med)
         .select("o_orderkey")
         .collect()
     }
-
-    # baseline: driver-side decode (threshold far above the vector)
-    base = {
+    got = {
         r.o_orderkey
         for r in st.read_snapshot(spark, t).select("o_orderkey").collect()
     }
-    assert base == expect
-
-    monkeypatch.setattr(st, "DV_DRIVER_DECODE_MAX", 16)
-    m = st._read_manifest(t, st.current_version(t))
-    lazies = [
-        ps
-        for ps in m["deletion_vectors"].values()
-        if isinstance(ps, st._LazyDVPositions)
-    ]
-    assert lazies and sum(len(ps) for ps in lazies) >= n_del - st.DV_INLINE_MAX
-
-    snap = st.read_snapshot(spark, t)
-    plan = snap._sc._jvm.PythonSQLUtils.explainString(
-        snap._jdf.queryExecution(), "formatted"
-    )
-    assert "MapInArrow" in plan  # executor decode is actually planned
-    got = {r.o_orderkey for r in snap.select("o_orderkey").collect()}
     assert got == expect
 
-    # metadata COUNT and CDF set-diffs decode the lazy ref on demand
     assert st.table_stats(t)["rows"] == n0 - n_del
     feed = st.changes(spark, t, from_version=1)
     assert feed.filter(F.col("_change_type") == "delete").count() == n_del
@@ -4859,7 +4870,7 @@ def test_table_properties_append_only_and_vacuum_grace(spark, tmp_path):
     # vacuum grace default from the property: fresh orphans survive
     st.set_table_properties(t, {"vacuum.graceSeconds": "3600"})
     st._write_data(
-        spark.createDataFrame([(999, 9.0)], "id int, v double"), t, []
+        spark.createDataFrame([(999, 9.0)], "id int, v double"), t, [], {}
     )  # simulated crashed write, seconds old
     rep = st.vacuum(t)  # no grace arg -> property applies
     assert rep["deleted_files"] == 0 and rep["skipped_young_files"] > 0
